@@ -2,151 +2,234 @@
 
 Replaces the reference's per-document LLM session loop
 (/root/reference/main.py:228-503 + euaa_사례/sentence_composer.py:635-744)
-with the deterministic rule core, executed as ONE map-only stage:
+with the deterministic rule core, executed as ONE map-only stage: no
+explode, no shuffle — each Arrow batch of documents is transformed by an
+``arrow_udf`` (planned as the single ArrowEvalPython node) whose kernel
+never leaves Arrow until the per-document FSM:
 
-  * no explode, no shuffle — each document's span array is transformed in
-    place by an Arrow-batched pandas UDF (vectorized across documents;
-    sequential only *within* a document, which the sentence-FSM semantics
-    require anyway, cf. SURVEY.md §2.8);
-  * cleanup + boilerplate detection + tagging are pandas-vectorized inside
-    the batch (C-level regex over flattened spans), only the run-merge /
-    composition FSM walks fragments per document;
-  * giant documents are bounded by spark.sql.execution.arrow.maxRecordsPerBatch
-    so one Arrow batch never holds more than a few hundred documents.
+  1. **flatten + order** — the batch's ``list<struct>`` column is
+     flattened once; a stable sort on (document, offset) restores each
+     document's reading order (skipped when the input is already in it);
+  2. **front-end in pyarrow.compute** (RE2, C++) — the cleanup trigger,
+     then the cleanup replaces on the dirty rows only
+     (``replace_with_mask``); boilerplate keys as ``value_counts`` over a
+     ``document\x00collapsed`` key followed by ``is_in``; the text-shape
+     tags with ``match_substring_regex`` / ``count_substring``. Every
+     pattern is the RE2_* twin rules.py keeps next to the Python pattern
+     (tests/test_re2_twins.py pins the character classes);
+  3. **FSM on parallel lists** — the run-merge and sentence-composition
+     FSM (rules.merge_tag_runs / rules.compose_runs, the ONLY FSM) walks
+     each document's kept (kind, text, media_ref) lists; the output is
+     assembled with ``ListArray.from_arrays``, no per-span dicts.
 
-At cluster scale the input is hash-salted and range-repartitioned by the
-pipeline wrapper (pipeline.py) BEFORE this stage, per the north rule.
+Arrow batches are bounded by spark.sql.execution.arrow.maxRecordsPerBatch,
+so one batch never holds more than a few hundred documents. At cluster
+scale the input is hash-salted and range-repartitioned by the pipeline
+wrapper (pipeline.py) BEFORE this stage, per the north rule.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_type
 
 from pdf_extract_spark import rules
 from pdf_extract_spark.schemas import SPANS
 
+SPANS_ARROW = to_arrow_type(SPANS)
+# spark.sql.execution.arrow.useLargeVarTypes ships large_string fields;
+# the result must come back in the type the batch arrived in
+SPANS_ARROW_LARGE = to_arrow_type(SPANS, prefers_large_types=True)
 
-def _extract_batch(spans_series: pd.Series) -> pd.Series:
-    """Vectorized batch extraction: Series[list[dict-span]] -> same shape.
-
-    Flattens the batch to one pandas frame, runs every regex cleanup and
-    the tagging classifier as vectorized column ops (shared compiled
-    patterns from rules.py), then walks each document once for the
-    run-merge + sentence-composition FSM.
-    """
-    docs = spans_series.tolist()
-    rows = []  # (batch_pos, kind, text, media_ref, offset)
-    for i, spans in enumerate(docs):
-        if spans is None:
-            continue
-        for s in spans:
-            rows.append((i, s["kind"], s["text"] or "", s["media_ref"] or "", s["offset"]))
-    out: list[list[dict] | None] = [[] for _ in docs]
-    if not rows:
-        return pd.Series([[] if d is not None else None for d in docs])
-
-    df = pd.DataFrame(rows, columns=["i", "kind", "text", "media_ref", "offset"])
-    df.sort_values(["i", "offset"], inplace=True, kind="mergesort")
-
-    # rules.tag_fragments semantics: kind == 'media' takes the media
-    # branch, kind == 'table' keeps its structural tag (cleanup + empty
-    # drop but NO boilerplate participation), anything else flows down
-    # the text path — boilerplate keys are counted over kind == 'text'
-    # spans strictly
-    kinds_in = df["kind"].to_numpy()
-    is_text = kinds_in == "text"
-    is_media = kinds_in == "media"
-    is_table = kinds_in == "table"
-
-    # one combined trigger scan decides which fragments need the full
-    # regex cleanup chain; for the (typical) clean majority — no dot
-    # leaders, bullets, stars, or whitespace beyond single spaces — every
-    # pass is identity except the final strip, so four sub passes over
-    # the whole batch collapse into one contains pass plus strips
-    # (equivalence pinned by the golden tests, whose oracle runs the
-    # UNvectorized rules chain)
-    dirty = df["text"].str.contains(rules.RE_CLEAN_TRIGGER, regex=True)
-
-    # --- boilerplate detection (rules.boilerplate_keys, vectorized) -----
-    collapsed = df["text"].str.strip()
-    if dirty.any():
-        collapsed.loc[dirty] = (
-            df.loc[dirty, "text"].str.replace(rules.RE_WS, " ", regex=True).str.strip()
-        )
-    # the length gate applies to the RAW text (rules.boilerplate_keys:
-    # `len(t) <= MAX` before collapsing), not the collapsed form; keys
-    # are COUNTED over kind=='text' short spans only, and the DROP
-    # applies to every non-media, non-table span whose collapsed text is
-    # a key (tag_fragments: `if collapse_ws(raw) in bp: continue`;
-    # table spans are structural and exempt)
-    short = df["text"].str.len() <= rules.BOILERPLATE_MAX_LEN
-    counted_mask = is_text & short & (collapsed != "")
-    counted = collapsed[counted_mask]
-    sizes = counted.groupby([df["i"][counted_mask], counted]).size()
-    keys = sizes[sizes >= rules.BOILERPLATE_MIN_REPEATS].index  # (i, key) pairs
-    if len(keys):
-        all_pairs = pd.MultiIndex.from_arrays([df["i"], collapsed])
-        bp_mask = pd.Series(all_pairs.isin(keys), index=df.index)
-    else:
-        bp_mask = pd.Series(False, index=df.index)
-
-    # --- cleanup: dot-leaders -> bullets -> '*' -> whitespace -----------
-    cleaned = df["text"].str.strip()
-    if dirty.any():
-        cleaned.loc[dirty] = (
-            df.loc[dirty, "text"]
-            .str.replace(rules.RE_DOT_LEADER, "", regex=True)
-            .str.replace(rules.RE_BULLET, "", regex=True)
-            .str.replace(rules.RE_STAR, " ", regex=True)
-            .str.replace(rules.RE_WS, " ", regex=True)
-            .str.strip()
-        )
-
-    keep = is_media | (((~bp_mask) | is_table) & (cleaned != ""))
-
-    # --- tagging (rules.tag_by_text, same precedence, vectorized) -------
-    h3 = cleaned.str.match(rules.RE_H3_COLON)
-    last_terminal = cleaned.str.endswith((".", "?", "!"))
-    many_words = cleaned.str.count(" ") + 1 > rules.MAX_HEADER_WORDS
-    h2 = cleaned.str.match(rules.RE_H2_NUM)
-    h1 = cleaned.str.match(rules.RE_H1_NUM) | cleaned.str.match(rules.RE_ALLCAPS)
-    eligible = (~h3) & (~last_terminal) & (~many_words)
-    tag = pd.Series("P", index=df.index)
-    tag[h3] = "H3"
-    tag[eligible & h2] = "H2"
-    tag[eligible & h1 & (~h2)] = "H1"
-    tag[is_table] = "table"
-    tag[is_media] = "media"
-
-    # --- per-document run-merge + composition FSM -----------------------
-    sub = df[keep]
-    kinds = tag[keep].to_numpy()
-    texts = cleaned[keep].to_numpy()
-    media = sub["media_ref"].to_numpy()
-    idx = sub["i"].to_numpy()
-
-    start = 0
-    n = len(idx)
-    while start < n:
-        end = start
-        cur = idx[start]
-        while end < n and idx[end] == cur:
-            end += 1
-        frags = [
-            {"kind": kinds[j], "text": "" if kinds[j] == "media" else texts[j],
-             "media_ref": media[j] if kinds[j] == "media" else ""}
-            for j in range(start, end)
-        ]
-        out[cur] = rules.compose_fragments(rules.merge_consecutive_tags(frags))
-        start = end
-
-    return pd.Series([o if docs[i] is not None else None for i, o in enumerate(out)])
+# tag codes -> kind strings
+_KIND_NAMES = np.array(["P", "H1", "H2", "H3", "table", "media"], dtype=object)
+_P, _H1, _H2, _H3, _TABLE, _MEDIA = range(6)
 
 
-@pandas_udf(SPANS)
-def extract_spans(spans: pd.Series) -> pd.Series:
+def _to_list(strings: pa.Array) -> list[str]:
+    # via numpy: ~6x faster than to_pylist(), which boxes a Scalar per row
+    return strings.to_numpy(zero_copy_only=False).tolist()
+
+
+def _as_spans_array(spans) -> pa.Array:
+    """Accept what Spark ships (a pa.Array) and, for in-process callers, a
+    pandas Series or list of span-dict lists."""
+    if isinstance(spans, pa.Array):
+        return spans
+    return pa.array(spans, type=SPANS_ARROW)
+
+
+def _boilerplate_mask(doc, is_text, is_candidate, raw_len, collapsed) -> pa.Array:
+    """rules.boilerplate_keys + the `collapse_ws(raw) in bp` drop: keys are
+    COUNTED over kind=='text' spans with 1 <= len(raw) <= MAX and a
+    non-empty collapsed form, and DROP every candidate span (non-media,
+    non-table) whose collapsed form is a key of its own document. A key
+    comes from a raw text of at most MAX chars, so only candidates whose
+    collapsed form is that short can hit one."""
+    n = len(collapsed)
+    coll_len = pc.utf8_length(collapsed)
+    cand = pc.and_(is_candidate, pc.and_(pc.greater(coll_len, 0),
+                                         pc.less_equal(coll_len, rules.BOILERPLATE_MAX_LEN)))
+    if not pc.any(cand).as_py():
+        return pa.array(np.zeros(n, dtype=bool))
+    keys = pc.binary_join_element_wise(
+        pc.cast(pc.filter(doc, cand), pa.string()),
+        pc.cast(pc.filter(collapsed, cand), pa.string()),
+        "\x00",
+    )
+    counted = pc.filter(
+        pc.and_(is_text, pc.less_equal(raw_len, rules.BOILERPLATE_MAX_LEN)), cand
+    )
+    vc = pc.value_counts(pc.filter(keys, counted))
+    bp = pc.filter(vc.field("values"),
+                   pc.greater_equal(vc.field("counts"), rules.BOILERPLATE_MIN_REPEATS))
+    if not len(bp):
+        return pa.array(np.zeros(n, dtype=bool))
+    return pc.replace_with_mask(pa.array(np.zeros(n, dtype=bool)), cand,
+                                pc.is_in(keys, value_set=bp))
+
+
+def _tag_codes(cleaned, is_media, is_table) -> pa.Array:
+    """rules.tag_by_text over cleaned text (same precedence), with the
+    structural kinds overriding: media, then table, then the text tags."""
+    def m(pattern):
+        return pc.match_substring_regex(cleaned, pattern)
+
+    h3 = m(rules.RE2_H3_COLON)
+    # cleaned text holds single spaces only, so words = spaces + 1
+    eligible = pc.and_not(
+        pc.invert(pc.or_(m(rules.RE2_TERMINAL_END),
+                         pc.greater_equal(pc.count_substring(cleaned, " "),
+                                          rules.MAX_HEADER_WORDS))),
+        h3,
+    )
+    h2 = pc.and_(eligible, m(rules.RE2_H2_NUM))
+    h1 = pc.and_(eligible, pc.or_(m(rules.RE2_H1_NUM), m(rules.RE2_ALLCAPS)))
+    return pc.case_when(
+        pc.make_struct(is_media, is_table, h3, h2, h1),
+        _MEDIA, _TABLE, _H3, _H2, _H1, _P,
+    )
+
+
+def _extract_batch(spans) -> pa.Array:
+    """Arrow-native batch extraction: list<span> -> list<span>, one output
+    row per input row; NULL rows stay NULL, empty rows give [].
+    Equivalent to rules.extract_document per row (tests/test_properties.py
+    fuzzes the parity)."""
+    arr = _as_spans_array(spans)
+    large = pa.types.is_large_string(arr.type.value_type.field("kind").type)
+    out_type = SPANS_ARROW_LARGE if large else SPANS_ARROW
+    n_docs = len(arr)
+
+    # --- 1. flatten + stable (document, offset) order -------------------
+    # parent index per flattened span from the row lengths: unlike
+    # pc.list_parent_indices this agrees with list_flatten on NULL rows
+    # backed by a non-empty range and on sliced arrays
+    lengths = pc.fill_null(pc.list_value_length(arr), 0).to_numpy()
+    flat = pc.list_flatten(arr)
+    doc = pa.array(np.repeat(np.arange(n_docs, dtype=np.int32), lengths))
+    offset = pc.struct_field(flat, "offset")
+    if len(flat) > 1:
+        ordered = pc.all(pc.or_(
+            pc.not_equal(doc[1:], doc[:-1]),
+            pc.greater_equal(offset[1:], offset[:-1]),
+        )).as_py()
+        if not ordered:
+            order = pc.sort_indices(
+                pa.table({"d": doc, "o": offset}),
+                sort_keys=[("d", "ascending"), ("o", "ascending")],
+            )
+            flat = flat.take(order)
+            doc = doc.take(order)
+    del offset
+    kind = pc.struct_field(flat, "kind")
+    text = pc.fill_null(pc.struct_field(flat, "text"), "")
+    media = pc.fill_null(pc.struct_field(flat, "media_ref"), "")
+    del flat
+    is_media = pc.fill_null(pc.equal(kind, "media"), False)
+    is_table = pc.fill_null(pc.equal(kind, "table"), False)
+    is_text = pc.fill_null(pc.equal(kind, "text"), False)
+    del kind
+
+    # --- 2. cleanup front-end (rules.clean_fragment / collapse_ws) ------
+    # clean rows (no trigger hit): every cleanup pass is identity except
+    # the final strip, so cleaned == collapsed == trimmed raw text
+    cleaned = pc.utf8_trim_whitespace(text)
+    collapsed = cleaned
+    dirty = pc.match_substring_regex(text, rules.RE2_CLEAN_TRIGGER)
+    if pc.any(dirty).as_py():
+        raw_d = pc.filter(text, dirty)
+        collapsed = pc.replace_with_mask(cleaned, dirty, pc.utf8_trim_whitespace(
+            pc.replace_substring_regex(raw_d, rules.RE2_WS, " ")))
+        t = pc.replace_substring_regex(raw_d, rules.RE2_DOT_LEADER, "")
+        t = pc.replace_substring_regex(t, rules.RE2_BULLET, "")
+        t = pc.replace_substring_regex(t, rules.RE2_STAR, " ")
+        t = pc.replace_substring_regex(t, rules.RE2_WS, " ")
+        cleaned = pc.replace_with_mask(cleaned, dirty, pc.utf8_trim_whitespace(t))
+        del raw_d, t
+    raw_len = pc.utf8_length(text)
+    del text
+    bp = _boilerplate_mask(
+        doc, is_text, pc.invert(pc.or_(is_media, is_table)), raw_len, collapsed
+    )
+    del collapsed, raw_len
+
+    # media spans always stay; other spans stay unless boilerplate
+    # (never for table spans) or cleaned to empty
+    keep = pc.or_(is_media, pc.and_(pc.invert(bp), pc.greater(pc.utf8_length(cleaned), 0)))
+    doc = pc.filter(doc, keep)
+    is_media = pc.filter(is_media, keep)
+    cleaned = pc.filter(cleaned, keep)
+    codes = _tag_codes(cleaned, is_media, pc.filter(is_table, keep))
+    kinds = _KIND_NAMES[codes.to_numpy()].tolist()
+    texts = _to_list(pc.if_else(is_media, "", cleaned))
+    medias = _to_list(pc.if_else(is_media, pc.filter(media, keep), ""))
+    del cleaned, media, codes
+
+    # --- 3. per-document run-merge + composition FSM (rules.py) ---------
+    bounds = np.zeros(n_docs + 1, dtype=np.int64)
+    np.cumsum(np.bincount(doc.to_numpy(), minlength=n_docs), out=bounds[1:])
+    bounds = bounds.tolist()
+    out_k: list[str] = []
+    out_t: list[str] = []
+    out_m: list[str] = []
+    list_offsets = [0]
+    for d in range(n_docs):
+        a, b = bounds[d], bounds[d + 1]
+        if a < b:
+            k, t, m = rules.compose_runs(
+                *rules.merge_tag_runs(kinds[a:b], texts[a:b], medias[a:b])
+            )
+            out_k += k
+            out_t += t
+            out_m += m
+        list_offsets.append(len(out_k))
+
+    list_offsets = np.array(list_offsets, dtype=np.int32)
+    counts = np.diff(list_offsets)
+    span_offset = np.arange(len(out_k), dtype=np.int32) - np.repeat(list_offsets[:-1], counts)
+    struct_type = out_type.value_type
+    values = pa.StructArray.from_arrays(
+        [pa.array(out_k, struct_type.field("kind").type),
+         pa.array(out_t, struct_type.field("text").type),
+         pa.array(out_m, struct_type.field("media_ref").type),
+         pa.array(span_offset, pa.int32())],
+        fields=list(struct_type),
+    )
+    return pa.ListArray.from_arrays(
+        pa.array(list_offsets), values, type=out_type,
+        mask=arr.is_null() if arr.null_count else None,
+    )
+
+
+@arrow_udf(SPANS)
+def extract_spans(spans: pa.Array) -> pa.Array:
     return _extract_batch(spans)
 
 

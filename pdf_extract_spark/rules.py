@@ -20,7 +20,7 @@ hand or delegated to an LLM prompt:
   * text-heuristic header tagging for style-less span input (our own
     contract; documented inline)
 
-Both the Spark pandas-UDFs (pdf_extract_spark.operators.*) and the golden
+Both the Spark UDFs (pdf_extract_spark.operators.*) and the golden
 test oracle (pdf_extract_spark.oracle) import THIS module, so the span-
 sequence-equality tests verify the distributed plumbing, not two divergent
 rule implementations.
@@ -72,13 +72,64 @@ BOILERPLATE_MIN_REPEATS = 3
 BOILERPLATE_MAX_LEN = 80
 
 # --------------------------------------------------------------------------
-# cleanup regexes (compiled once; shared with vectorized pandas .str ops)
+# RE2 character classes (pyarrow.compute twins, operators/extract.py)
+# --------------------------------------------------------------------------
+# Each kernel pattern below has an RE2_* twin on the line after it, applied
+# by the Arrow kernel where rules.py applies the Python pattern (trigger
+# and cleanup to raw text, tag patterns to cleaned text). Python's str
+# patterns are Unicode-aware where RE2's are not, so every class the twins
+# need is spelled out as explicit \x{..} ranges — written here as LITERALS
+# (tests/test_re2_twins.py checks them against every code point; deriving
+# them by a code-point scan at import costs ~1.3 s per worker):
+#   * RE2 \s is [\t\n\f\r ] — it misses 24 of the 29 str.isspace chars
+#     (\x0b, \x1c-\x1f, \x85, \xa0, U+1680, U+2000-U+200A, U+2028, U+2029,
+#     U+202F, U+205F, U+3000) that Python's \s, str.strip and str.split
+#     treat as whitespace;
+#   * RE2 \p{Nd} follows a newer Unicode than Python 3.11's \d (14.0) and
+#     accepts 20 more digits (U+11F50-U+11F59, U+1E4F0-U+1E4F9).
+# Patterns are assembled by concatenation, never str.format (the
+# \x{..} braces).
+PY_WS_CHARS = (  # str.isspace() == Python re \s
+    r"\x{9}-\x{d}\x{1c}-\x{20}\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
+    r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}"
+)
+PY_NONSPACE_WS_CHARS = (  # Python [^\S ]: whitespace other than ' '
+    r"\x{9}-\x{d}\x{1c}-\x{1f}\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
+    r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}"
+)
+PY_DIGIT_CHARS = (  # Python 3.11 re \d (Unicode 14.0 Nd)
+    r"\x{30}-\x{39}\x{660}-\x{669}\x{6f0}-\x{6f9}\x{7c0}-\x{7c9}\x{966}-\x{96f}"
+    r"\x{9e6}-\x{9ef}\x{a66}-\x{a6f}\x{ae6}-\x{aef}\x{b66}-\x{b6f}\x{be6}-\x{bef}"
+    r"\x{c66}-\x{c6f}\x{ce6}-\x{cef}\x{d66}-\x{d6f}\x{de6}-\x{def}\x{e50}-\x{e59}"
+    r"\x{ed0}-\x{ed9}\x{f20}-\x{f29}\x{1040}-\x{1049}\x{1090}-\x{1099}"
+    r"\x{17e0}-\x{17e9}\x{1810}-\x{1819}\x{1946}-\x{194f}\x{19d0}-\x{19d9}"
+    r"\x{1a80}-\x{1a89}\x{1a90}-\x{1a99}\x{1b50}-\x{1b59}\x{1bb0}-\x{1bb9}"
+    r"\x{1c40}-\x{1c49}\x{1c50}-\x{1c59}\x{a620}-\x{a629}\x{a8d0}-\x{a8d9}"
+    r"\x{a900}-\x{a909}\x{a9d0}-\x{a9d9}\x{a9f0}-\x{a9f9}\x{aa50}-\x{aa59}"
+    r"\x{abf0}-\x{abf9}\x{ff10}-\x{ff19}\x{104a0}-\x{104a9}\x{10d30}-\x{10d39}"
+    r"\x{11066}-\x{1106f}\x{110f0}-\x{110f9}\x{11136}-\x{1113f}\x{111d0}-\x{111d9}"
+    r"\x{112f0}-\x{112f9}\x{11450}-\x{11459}\x{114d0}-\x{114d9}\x{11650}-\x{11659}"
+    r"\x{116c0}-\x{116c9}\x{11730}-\x{11739}\x{118e0}-\x{118e9}\x{11950}-\x{11959}"
+    r"\x{11c50}-\x{11c59}\x{11d50}-\x{11d59}\x{11da0}-\x{11da9}\x{16a60}-\x{16a69}"
+    r"\x{16ac0}-\x{16ac9}\x{16b50}-\x{16b59}\x{1d7ce}-\x{1d7ff}\x{1e140}-\x{1e149}"
+    r"\x{1e2f0}-\x{1e2f9}\x{1e950}-\x{1e959}\x{1fbf0}-\x{1fbf9}"
+)
+_RE2_SPACE = "[" + PY_WS_CHARS + "]"
+_RE2_NONSPACE = "[^" + PY_WS_CHARS + "]"
+_RE2_DIGIT = "[" + PY_DIGIT_CHARS + "]"
+
+# --------------------------------------------------------------------------
+# cleanup regexes (compiled once; RE2_* twin on the line after each)
 # --------------------------------------------------------------------------
 
 RE_WS = re.compile(r"\s+")  # C3, layout_analyzer.py:88
+RE2_WS = _RE2_SPACE + "+"
 RE_DOT_LEADER = re.compile(r"\.{5,}")  # C4, euaa_사례/pdf_to_json/main.py:33
+RE2_DOT_LEADER = r"\.{5,}"
 RE_BULLET = re.compile(r"^[-‐–—−·•○:.]\s*")  # C5, metadata_generator.py:524-526
+RE2_BULLET = "^[-‐–—−·•○:.]" + _RE2_SPACE + "*"
 RE_STAR = re.compile(r"\*+")  # C5 second half, add_metadata.py:72-75
+RE2_STAR = r"\*+"
 RE_HYPHEN_RUN = re.compile(r"-{2,}")  # C9, metadata_generator.py:536
 RE_EDGE_CHARS = re.compile(r"^[:;* ]+|[:;* ]+$")  # C10, metadata_generator.py:538-540
 RE_CODE_REF = re.compile(r"\s*\((?:IGC|IBC) Code \d+\.\d+\)")  # C6, metadata_generator.py:527
@@ -93,9 +144,20 @@ QUOTE_MAP = str.maketrans({"“": '"', "”": '"', "„": '"', "‟": '"',
 # the reference detects headers from font style, which plain span tables
 # lack, so numbering/casing stand in for size/boldness)
 RE_H2_NUM = re.compile(r"^\d+\.\d+(?:\.\d+)*\.?\s+\S")  # "2.1 Title", "3.4.5 Title"
+RE2_H2_NUM = (
+    "^" + _RE2_DIGIT + r"+\." + _RE2_DIGIT + r"+(?:\." + _RE2_DIGIT + r"+)*\.?"
+    + _RE2_SPACE + "+" + _RE2_NONSPACE
+)
 RE_H1_NUM = re.compile(r"^\d+\.?\s+\S")  # "2. Title", "7 Title"
+RE2_H1_NUM = "^" + _RE2_DIGIT + r"+\.?" + _RE2_SPACE + "+" + _RE2_NONSPACE
 RE_ALLCAPS = re.compile(r"^[A-Z][A-Z0-9 ,'&\-]{2,}$")  # "EXECUTIVE SUMMARY"
+RE2_ALLCAPS = r"^[A-Z][A-Z0-9 ,'&\-]{2,}\z"
 RE_H3_COLON = re.compile(r"^[^.?!]{1,60}:$")  # "Scope:" style run-in header
+# Python's `$` above also matches before a final "\n", RE2's \z does
+# not; the two agree only because tagging sees CLEANED text, which can
+# never hold "\n" (collapse_ws maps every whitespace char to ' ')
+RE2_H3_COLON = r"^[^.?!]{1,60}:\z"
+RE2_TERMINAL_END = r"[.?!]\z"  # tag_by_text's `t[-1] in TERMINALS`
 MAX_HEADER_WORDS = 12
 
 # vectorized-cleanup fast path trigger (operators/extract.py): a fragment
@@ -104,6 +166,7 @@ MAX_HEADER_WORDS = 12
 # change (any non-space whitespace, or a double space) — the alternation
 # is exactly the union of the four cleanup patterns' trigger conditions
 RE_CLEAN_TRIGGER = re.compile(r"\.{5,}|\*|[^\S ]|  |^[-‐–—−·•○:.]")
+RE2_CLEAN_TRIGGER = r"\.{5,}|\*|[" + PY_NONSPACE_WS_CHARS + "]|  |^[-‐–—−·•○:.]"
 
 RE_SENT_BOUNDARY = re.compile(r"[.?!]+[\"')\]]*(?:\s+|$)")
 # fast path: text whose ONLY terminal punctuation is one trailing run and
@@ -330,23 +393,38 @@ def reading_order_key(x0: float, y0: float, page_w: float) -> tuple:
 # run merge (W4) — merge adjacent same-tag headers
 # --------------------------------------------------------------------------
 
-def merge_consecutive_tags(frags: list[dict]) -> list[dict]:
-    """W4 — euaa_사례/pdf_to_json/main.py:18-74.
+def merge_tag_runs(
+    kinds: list[str], texts: list[str], media_refs: list[str],
+) -> tuple[list[str], list[str], list[str]]:
+    """W4 — euaa_사례/pdf_to_json/main.py:18-74, on parallel lists.
 
     Adjacent fragments with the same header tag (H1/H2/H3) merge into one,
     joined by a single space (dot-leaders already stripped). P and media
     fragments pass through and break any run.
-    Input/output: dicts with at least {kind, text, media_ref}.
     """
-    out: list[dict] = []
-    for f in frags:
-        k = f["kind"]
-        if out and k in HEADER_KINDS and out[-1]["kind"] == k:
-            out[-1] = dict(out[-1])
-            out[-1]["text"] = collapse_ws(out[-1]["text"] + " " + (f["text"] or ""))
+    out_k: list[str] = []
+    out_t: list[str] = []
+    out_m: list[str] = []
+    prev = None
+    for k, t, m in zip(kinds, texts, media_refs):
+        if k == prev and k in HEADER_KINDS:
+            out_t[-1] = collapse_ws(out_t[-1] + " " + (t or ""))
         else:
-            out.append(f)
-    return out
+            out_k.append(k)
+            out_t.append(t)
+            out_m.append(m)
+            prev = k
+    return out_k, out_t, out_m
+
+
+def merge_consecutive_tags(frags: list[dict]) -> list[dict]:
+    """merge_tag_runs over fragment dicts {kind, text, media_ref}."""
+    kinds, texts, media = merge_tag_runs(
+        [f["kind"] for f in frags], [f["text"] for f in frags],
+        [f["media_ref"] for f in frags],
+    )
+    return [{"kind": k, "text": t, "media_ref": m}
+            for k, t, m in zip(kinds, texts, media)]
 
 
 # --------------------------------------------------------------------------
@@ -686,30 +764,51 @@ def layout_document(pages: list[dict]) -> list[dict]:
     return merge_consecutive_tags(frags)
 
 
-def compose_fragments(frags: list[dict]) -> list[dict]:
-    """Stage 6+7 of extract_document, reusable for the layout path:
-    tagged fragments -> final composed spans with 0-based offsets."""
-    out: list[dict] = []
+def compose_runs(
+    kinds: list[str], texts: list[str], media_refs: list[str],
+) -> tuple[list[str], list[str], list[str]]:
+    """Stage 6 of extract_document on parallel lists: P runs go through
+    the sentence FSM (a one-fragment run passes through unchanged), every
+    other fragment flushes the run and is emitted 1:1 in place."""
+    out_k: list[str] = []
+    out_t: list[str] = []
+    out_m: list[str] = []
     p_run: list[str] = []
 
     def flush() -> None:
-        if not p_run:
-            return
         if len(p_run) == 1:
-            out.append({"kind": "P", "text": p_run[0], "media_ref": ""})
+            out_k.append("P")
+            out_t.append(p_run[0])
+            out_m.append("")
         else:
-            for sent in compose_sentences(p_run):
-                out.append({"kind": "P", "text": sent, "media_ref": ""})
+            sents = compose_sentences(p_run)
+            out_k.extend(["P"] * len(sents))
+            out_t.extend(sents)
+            out_m.extend([""] * len(sents))
         p_run.clear()
 
-    for f in frags:
-        if f["kind"] == "P":
-            p_run.append(f["text"])
-        else:
+    for k, t, m in zip(kinds, texts, media_refs):
+        if k == "P":
+            p_run.append(t)
+            continue
+        if p_run:
             flush()
-            out.append({"kind": f["kind"], "text": f["text"], "media_ref": f["media_ref"]})
-    flush()
+        out_k.append(k)
+        out_t.append(t)
+        out_m.append(m)
+    if p_run:
+        flush()
+    return out_k, out_t, out_m
+
+
+def compose_fragments(frags: list[dict]) -> list[dict]:
+    """Stage 6+7 of extract_document, reusable for the layout path:
+    tagged fragments -> final composed spans with 0-based offsets."""
+    kinds, texts, media = compose_runs(
+        [f["kind"] for f in frags], [f["text"] for f in frags],
+        [f["media_ref"] for f in frags],
+    )
     return [
-        {"kind": f["kind"], "text": f["text"], "media_ref": f["media_ref"], "offset": i}
-        for i, f in enumerate(out)
+        {"kind": k, "text": t, "media_ref": m, "offset": i}
+        for i, (k, t, m) in enumerate(zip(kinds, texts, media))
     ]

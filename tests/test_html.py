@@ -326,7 +326,7 @@ def test_vectorized_kernel_matches_rules_on_table_spans():
         {"kind": "text", "text": "real body sentence text", "media_ref": "", "offset": 4},
     ]
     docs = [mixed, None, [], bp]
-    got = _extract_batch(pd.Series(docs)).tolist()
+    got = _extract_batch(pd.Series(docs)).to_pylist()
     want = [rules.extract_document(d) if d is not None else None for d in docs]
     assert got == want
     assert [s["kind"] for s in got[0]] == ["P", "table", "table", "media", "P"]

@@ -44,6 +44,13 @@ def test_extraction_single_exchange(spark):
     assert "rangepartitioning" in plan
     assert n_exchange == 1, plan
     assert plan.count("ArrowEvalPython") == 1, plan
+    # the kernel is an arrow_udf: Arrow in, Arrow out, no pandas on the
+    # hot path
+    from pyspark.util import PythonEvalType
+
+    from pdf_extract_spark.operators.extract import extract_spans
+
+    assert extract_spans.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
 
 
 def test_agg_is_partial_and_jvm_side(spark):

@@ -156,7 +156,11 @@ def test_extract_batch_matches_rules_for_arbitrary_kinds():
     """Kernel/oracle parity must hold for UNEXPECTED kind values too:
     rules.tag_fragments sends only kind=='media' down the media branch —
     any other kind takes the text path, and only kind=='text' counts
-    toward boilerplate keys."""
+    toward boilerplate keys. The alphabet also reaches every place the
+    kernel's RE2 twins could part from Python's re: Unicode whitespace
+    outside RE2's \\s, non-ASCII digits (one of them a digit to RE2's
+    newer Unicode but not to Python 3.11), bullets, brackets, quotes —
+    plus NULL text / media_ref / documents."""
     import pandas as pd
     from hypothesis import given, settings
     from hypothesis import strategies as st
@@ -165,27 +169,61 @@ def test_extract_batch_matches_rules_for_arbitrary_kinds():
     from pdf_extract_spark.operators.extract import _extract_batch
 
     span_st = st.fixed_dictionaries({
-        "kind": st.sampled_from(["text", "media", "image", "x", ""]),
+        "kind": st.sampled_from(["text", "media", "table", "image", "x", ""]),
         # alphabet reaches every tag branch: digits + dots (H1/H2
         # numbering), colon (H3), uppercase (ALLCAPS), terminals,
         # bullets/stars/ws (cleanup chain)
-        "text": st.text(
-            alphabet=st.sampled_from(list("aB1. :?!*-\t")), max_size=14
+        "text": st.none() | st.text(
+            alphabet=st.sampled_from(
+                list("aB1. :?!*-\t")
+                + list("\x0b\x85\xa0\u3000\x1c\n\r")  # Unicode whitespace
+                + ["\u0663", "\U00011f50"]  # Arabic-Indic 3; Kawi 0 (RE2-only digit)
+                + list("•–()[]\"'")
+            ),
+            max_size=14,
         ),
-        "media_ref": st.sampled_from(["", "m:1"]),
+        "media_ref": st.sampled_from(["", "m:1", None]),
+        # out-of-order and tied offsets: the kernel's (doc, offset) sort
+        # must be as stable as rules' sorted()
+        "offset": st.integers(0, 5),
     })
 
     @settings(max_examples=400, deadline=None)
-    @given(st.lists(st.lists(span_st, max_size=8), min_size=1, max_size=4))
+    @given(st.lists(st.none() | st.lists(span_st, max_size=8), min_size=1, max_size=4))
     def check(docs):
-        docs = [
-            [dict(s, offset=i) for i, s in enumerate(spans)] for spans in docs
-        ]
-        got = _extract_batch(pd.Series(docs)).tolist()
-        exp = [rules.extract_document(spans) for spans in docs]
+        got = _extract_batch(pd.Series(docs)).to_pylist()
+        exp = [None if spans is None else rules.extract_document(spans) for spans in docs]
         assert got == exp, docs
 
     check()
+
+
+def test_extract_batch_arrow_layouts():
+    """The kernel takes whatever Arrow layout a batch arrives in: sliced
+    arrays, NULL rows backed by a non-empty value range, large_string
+    fields (returned in the same type)."""
+    import pyarrow as pa
+
+    from pdf_extract_spark import generator, rules
+    from pdf_extract_spark.operators.extract import (
+        SPANS_ARROW, SPANS_ARROW_LARGE, _extract_batch,
+    )
+
+    docs = [generator.make_document(i, 3)["spans"] for i in range(6)]
+    docs[2] = None
+    docs[4] = []
+    arr = pa.array(docs, type=SPANS_ARROW)
+    exp = [None if d is None else rules.extract_document(d) for d in docs]
+    assert _extract_batch(arr).type == SPANS_ARROW
+    assert _extract_batch(arr).to_pylist() == exp
+    assert _extract_batch(arr.slice(1, 4)).to_pylist() == exp[1:5]
+    # row 1 NULL over its 5 spans; row 2 (NULL above) re-validated as []
+    masked = pa.ListArray.from_arrays(
+        arr.offsets, arr.values, mask=pa.array([False, True] + [False] * 4)
+    )
+    assert _extract_batch(masked).to_pylist() == [exp[0], None, []] + exp[3:]
+    large = _extract_batch(arr.cast(SPANS_ARROW_LARGE))
+    assert large.type == SPANS_ARROW_LARGE and large.to_pylist() == exp
 
 
 def test_boilerplate_drop_covers_uncounted_spans():
@@ -218,7 +256,7 @@ def test_boilerplate_drop_covers_uncounted_spans():
             {"kind": "text", "text": "Kept sentence.", "media_ref": "", "offset": 4},
         ],
     ]
-    got = _extract_batch(pd.Series(docs)).tolist()
+    got = _extract_batch(pd.Series(docs)).to_pylist()
     exp = [rules.extract_document(spans) for spans in docs]
     assert got == exp
     assert [s["text"] for s in got[0]] == ["Real sentence."]
