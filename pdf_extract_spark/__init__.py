@@ -22,4 +22,10 @@ Design rules (SURVEY.md §7.1):
 
 __version__ = "0.1.0"
 
+from pdf_extract_spark import packaging as _packaging
 from pdf_extract_spark.session import build_spark  # noqa: F401
+
+# Must run at package import: that is the only package code a pyspark
+# worker is sure to run (it unpickles our UDFs by reference). Without it
+# every worker task re-reads each zip archive on sys.path (~0.2 s).
+_packaging.install_zip_invalidation_guard()

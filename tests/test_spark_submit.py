@@ -160,6 +160,29 @@ def test_pyfiles_zip_cache_keys_on_content_and_dest(tmp_path):
     packaging._ZIP_CACHE.clear()
 
 
+def test_pyfiles_zip_tempdir_removed_at_exit(tmp_path):
+    """A tempdir build is removed when the building interpreter exits; an
+    explicit dest_dir is kept."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    dist = tmp_path / "dist"
+    code = (
+        f"import sys; sys.path.insert(0, {REPO!r})\n"
+        "from pdf_extract_spark import packaging\n"
+        "print(packaging.build_pyfiles_zip())\n"
+        f"print(packaging.build_pyfiles_zip({str(dist)!r}))\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp))
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                          text=True, timeout=120, env=env)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    temp_zip, explicit_zip = proc.stdout.split()
+    assert temp_zip.startswith(str(tmp))
+    assert list(tmp.iterdir()) == []
+    assert explicit_zip == str(dist / "pdf_extract_spark.zip")
+    assert os.path.exists(explicit_zip)
+
+
 def test_bench_scaling_guards():
     """--scaling refuses a single level BEFORE any expensive subprocess
     run, and build_pdf refuses unknown variants instead of silently
